@@ -19,7 +19,12 @@ object Verify {
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        // a crashed query fails the run here, naming the query, instead of
+        // surfacing later as a missing output in the oracle compare
+        System.err.println(s"[verify] query $name failed")
+        e.printStackTrace()
+        spark.stop()
+        sys.exit(1)
       }
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)

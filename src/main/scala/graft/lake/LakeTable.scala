@@ -1,6 +1,13 @@
 package graft.lake
 
+import org.apache.hadoop.fs.{FileStatus, Path => HPath}
 import org.apache.spark.sql.{Column, DataFrame, Observation, SaveMode, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.catalog.BucketSpec
+import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.execution.datasources.{BucketingUtils, FileIndex,
+  FileStatusWithMetadata, HadoopFsRelation, PartitionDirectory}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -38,9 +45,11 @@ final case class Snapshot(
     // (and the meta columns) are DRIFT columns whose values ride in the
     // delta files' `extra` map and are lifted at read time
     baseCols: Seq[String] = Nil,
-    // on-disk format version. 2 = manifest-chain snapshots (r4+); 1 was
-    // the inline-`files` shape. Readers reject versions they don't know
-    // with a clear error instead of an opaque json4s MappingException.
+    // on-disk format version. 3 = buckets are Spark's own hash partitioning
+    // of the keys and file names carry the bucket id; 2 bucketed by
+    // xxhash64 (manifest-chain snapshots, r4+); 1 was the inline-`files`
+    // shape. Readers reject versions they don't know with a clear error
+    // instead of an opaque json4s MappingException.
     formatVersion: Int = LakeTable.CurrentFormatVersion)
 
 /** One data file reference inside a manifest: owning bucket, table-
@@ -62,6 +71,26 @@ final case class Manifest(
     base: Boolean,
     added: Seq[ManifestFile],
     removed: Seq[String])
+
+/** The `FileIndex` of every table read: exactly the given manifest
+  * entries under the table root `rootDir`. Path and size come from the
+  * manifests, so planning a scan never lists a directory or stats a file.
+  * `rootPaths` are the files themselves, which is what a scan's plan
+  * string renders as its location.
+  */
+private[lake] final case class ManifestFileIndex(rootDir: String,
+    files: Seq[ManifestFile]) extends FileIndex {
+  private lazy val statuses = files.map(f => FileStatusWithMetadata(new FileStatus(
+    f.size, false, 1, 0L, 0L, new HPath(Paths.get(rootDir, f.path).toUri))))
+  override def rootPaths: Seq[HPath] = statuses.map(_.getPath)
+  override def listFiles(partitionFilters: Seq[Expression],
+      dataFilters: Seq[Expression]): Seq[PartitionDirectory] =
+    Seq(PartitionDirectory(InternalRow.empty, statuses))
+  override def inputFiles: Array[String] = rootPaths.map(_.toString).toArray
+  override def refresh(): Unit = ()
+  override def sizeInBytes: Long = files.map(_.size).sum
+  override def partitionSchema: StructType = StructType(Nil)
+}
 
 /** Result of one merge commit, for metrics / listeners. */
 final case class MergeStats(
@@ -95,6 +124,11 @@ final case class MergeStats(
   *    the copy-on-write variant rewrote every touched bucket in full,
   *    which under Zipf-hot batches approaches O(table) per batch and
   *    makes a 10^10-event replay pay O(batches × table) write volume.
+  *    The bucket id is exactly Spark's `HashPartitioning(keys,
+  *    numBuckets)` partition id and every file name carries it, so the
+  *    table reads back as a Spark-bucketed relation planned from the
+  *    manifests alone: resolving a bucket is a per-task sort, never an
+  *    Exchange, and no read lists or stats a data file.
   *    Read amplification is bounded by **budgeted minor compaction**
   *    (LSM-style): a bucket whose file count exceeds `maxFilesPerBucket`
   *    merges its small-file tail (winner-per-key, tombstones kept) while
@@ -340,7 +374,7 @@ class LakeTable(
     */
   def readMeta(): DataFrame = currentSnapshot match {
     case None => spark.emptyDataFrame
-    case Some(s) => resolveFiles(s, filesOf(s))
+    case Some(s) => resolveFiles(s, entriesOf(s))
   }
 
   /** Bucket-scoped MOR resolve. Keys are hash-partitioned into buckets
@@ -348,27 +382,46 @@ class LakeTable(
     * delta is a batch's winner set, a rewrite is already resolved), so:
     *
     *  - a bucket referencing ONE file needs no resolution — scan it
-    *    as-is, shuffle-free;
+    *    as-is;
     *  - only buckets referencing SEVERAL files go through the winner
     *    window, and resolving them in isolation is exactly equivalent to
     *    the global window (a key never spans buckets).
     *
-    * Post-compaction steady state on a 100 TB table: the handful of
-    * recently-touched buckets shuffle, the compacted majority streams
-    * straight off parquet.
+    * Both branches scan the manifest-backed [[relation]]. Bucketed, its
+    * scan reports `HashPartitioning(keys, numBuckets)` with one task per
+    * bucket, which already satisfies the window's clustering: the window
+    * plans only a per-task sort (spilling like any sort) and no Exchange.
+    * With `bucketed = false` (the point lookup: one bucket) the scan is
+    * coalesced into one task instead, which satisfies the window just as
+    * well without launching `numBuckets` mostly-empty tasks.
     */
-  private def resolveFiles(s: Snapshot,
-      files: Map[String, Seq[String]]): DataFrame = {
-    val sch = StructType.fromDDL(s.schemaDdl)
-    val ext = extendedSchema(s, sch)
-    val (multi, single) = files.partition(_._2.size > 1)
-    if (multi.isEmpty)
-      liftDrift(s, readFiles(ext, files.values.flatten.toSeq))
-    else if (single.isEmpty)
-      resolve(s, liftDrift(s, readFiles(ext, multi.values.flatten.toSeq)))
-    else
-      liftDrift(s, readFiles(ext, single.values.flatten.toSeq)).unionByName(
-        resolve(s, liftDrift(s, readFiles(ext, multi.values.flatten.toSeq))))
+  private def resolveFiles(s: Snapshot, entries: Map[String, Seq[ManifestFile]],
+      bucketed: Boolean = true): DataFrame = {
+    def scan(es: Iterable[Seq[ManifestFile]]): DataFrame = {
+      val df = liftDrift(s, relation(s, es.flatten.toSeq, bucketed))
+      if (bucketed) df else df.coalesce(1)
+    }
+    val (multi, single) = entries.partition(_._2.size > 1)
+    if (multi.isEmpty) scan(single.values)
+    else if (single.isEmpty) resolve(s, scan(multi.values))
+    else scan(single.values).unionByName(resolve(s, scan(multi.values)))
+  }
+
+  /** The table's one read path: a `HadoopFsRelation` over the given
+    * manifest entries (raw rows, extended schema). With `bucketed` it
+    * declares `BucketSpec(numBuckets, keyCols)`; that claim is true
+    * because the writer's bucket id is Spark's own partition id for
+    * `HashPartitioning(keyCols, numBuckets)` ([[bucketExpr]]) and every
+    * file name carries it ([[writeBuckets]]), so a join or aggregate on
+    * the keys above a read may skip its own Exchange and stay correct.
+    */
+  private def relation(s: Snapshot, files: Seq[ManifestFile],
+      bucketed: Boolean): DataFrame = {
+    val index = ManifestFileIndex(root.toAbsolutePath.toString, files)
+    val spec = if (bucketed) Some(BucketSpec(s.numBuckets, s.keyCols, Nil)) else None
+    spark.baseRelationToDataFrame(HadoopFsRelation(index, StructType(Nil),
+      extendedSchema(s, StructType.fromDDL(s.schemaDdl)), spec,
+      new ParquetFileFormat, Map.empty)(spark))
   }
 
   /** Read schema for raw table files: snapshot schema + the stored `extra`
@@ -430,8 +483,10 @@ class LakeTable(
     * 1/`numBuckets` of the files (times the bucket's MOR depth) instead
     * of the whole table — the CDC serving path for "current state of
     * this repo/path". The bucket id is computed driver-side with the
-    * exact expression the writer uses (`xxhash64` over the key columns,
-    * positive mod), so pruning can never miss.
+    * exact expression the writer uses (Spark's `HashPartitioning` partition
+    * id: Murmur3 over the key columns, positive mod), so pruning can
+    * never miss. The bucket's files are scanned unbucketed in one task:
+    * one job, no Exchange.
     *
     * Returns live rows (tombstoned keys absent), user columns only.
     */
@@ -441,7 +496,7 @@ class LakeTable(
       require(keyValues.length == s.keyCols.length,
         s"lookup needs ${s.keyCols.mkString(",")} values, got $keyValues")
       // cast each caller value to the KEY COLUMN's snapshot type before
-      // hashing: xxhash64 is type-sensitive (hash of "5":string ≠ 5:long),
+      // hashing: Murmur3 is type-sensitive (hash of "5":string ≠ 5:long),
       // so a raw Literal of the caller's runtime type would prune to the
       // wrong bucket and silently return "not found" for a present key
       val sch = StructType.fromDDL(s.schemaDdl)
@@ -461,10 +516,11 @@ class LakeTable(
           CLit(casted, dt)
         }
       }
-      val h = new org.apache.spark.sql.catalyst.expressions.XxHash64(keyLits)
-        .eval(null).asInstanceOf[Long]
-      val b = java.lang.Math.floorMod(h, s.numBuckets.toLong).toString
-      val resolved = resolveFiles(s, filesOf(s).filter(_._1 == b))
+      val b = org.apache.spark.sql.catalyst.plans.physical
+        .HashPartitioning(keyLits, s.numBuckets).partitionIdExpression
+        .eval(null).toString
+      val resolved = resolveFiles(s, entriesOf(s).filter(_._1 == b),
+        bucketed = false)
       if (resolved.columns.isEmpty) resolved
       else s.keyCols.zip(keyLits)
         .foldLeft(resolved) { case (d, (c, v)) =>
@@ -478,14 +534,13 @@ class LakeTable(
     */
   def readRaw(): DataFrame = currentSnapshot match {
     case None => spark.emptyDataFrame
-    case Some(s) => readFiles(extendedSchema(s, StructType.fromDDL(s.schemaDdl)),
-      filesOf(s).values.flatten.toSeq)
+    case Some(s) => relation(s, entriesOf(s).values.flatten.toSeq, bucketed = false)
   }
 
   /** Time travel: read the table as of a given snapshot version. */
   def readVersion(version: Long): DataFrame = {
     val s = snapshot(version)
-    resolveFiles(s, filesOf(s))
+    resolveFiles(s, entriesOf(s))
       .filter(!col(DeletedMeta)).drop(LsnMeta, DeletedMeta)
   }
 
@@ -496,27 +551,54 @@ class LakeTable(
     * the pathological distinct-payload case batching-independent too).
     *
     * Callers pass only rows that genuinely need resolution —
-    * `resolveSnapshot` routes single-file buckets around the window.
+    * `resolveFiles` routes single-file buckets around the window.
+    * `lead` columns (functions of the keys) go first in the window's
+    * partitioning, so its per-task sort also orders rows by them.
     */
-  private def resolve(s: Snapshot, df: DataFrame): DataFrame =
-    if (df.columns.isEmpty) df
-    else {
-      import org.apache.spark.sql.expressions.Window
-      val w = Window.partitionBy(s.keyCols.map(col): _*)
-        .orderBy(col(LsnMeta).desc, col(DeletedMeta).desc)
-      df.withColumn("__rrn", row_number().over(w))
-        .filter(col("__rrn") === 1).drop("__rrn")
-    }
+  private def resolve(s: Snapshot, df: DataFrame,
+      lead: Seq[Column] = Nil): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    val w = Window.partitionBy((lead ++ s.keyCols.map(col)): _*)
+      .orderBy(col(LsnMeta).desc, col(DeletedMeta).desc)
+    df.withColumn("__rrn", row_number().over(w))
+      .filter(col("__rrn") === 1).drop("__rrn")
+  }
 
-  private def readFiles(sch: StructType, rel: Seq[String]): DataFrame =
-    if (rel.isEmpty) spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], sch)
-    else spark.read.schema(sch).parquet(rel.map(r => s"$tablePath/$r"): _*)
+  /** Winner-per-key rows of `files`, tagged with `__bucket`: the input
+    * of every rewrite (minor and major compaction). The bucketed scan
+    * hands each task exactly one bucket and the window leaves its rows
+    * ordered by `__bucket`, so a `partitionBy("__bucket")` write plans
+    * neither an Exchange nor a sort and writes one file per bucket.
+    */
+  private def resolveForRewrite(s: Snapshot, files: Seq[ManifestFile]): DataFrame =
+    resolve(s, liftDrift(s, relation(s, files, bucketed = true))
+      .withColumn("__bucket", bucketExpr(s)), lead = Seq(col("__bucket")))
 
   // -- merge (the sink) --------------------------------------------------------
 
-  /** Bucket assignment — deterministic hash partition on the key columns. */
-  private def bucketExpr = pmod(xxhash64(keyCols.map(col): _*), lit(numBuckets))
+  /** Bucket assignment: Spark's own `HashPartitioning(keyCols,
+    * numBuckets).partitionIdExpression`, i.e. `pmod(hash(keys),
+    * numBuckets)` (Murmur3, seed 42), over the keys at their snapshot
+    * types (the hash is type-sensitive). Being Spark's partition id is
+    * what lets [[relation]] declare the table bucketed.
+    */
+  private def bucketExpr(s: Snapshot): Column = {
+    val sch = StructType.fromDDL(s.schemaDdl)
+    pmod(hash(s.keyCols.map(c => col(c).cast(sch(c).dataType)): _*), lit(s.numBuckets))
+  }
+
+  /** `batch` plus its `__bucket` and the write-parallelism `__salt`.
+    * The salt hashes the keys with `xxhash64`, a function independent of
+    * the bucket's Murmur3, so `(__bucket, __salt)` spans
+    * `numBuckets × saltFactor` groups instead of collapsing onto the
+    * bucket whenever the two moduli share a factor.
+    */
+  private[graft] def withBucketAndSalt(batch: DataFrame, s: Snapshot,
+      saltFactor: Int): DataFrame =
+    batch.withColumn("__bucket", bucketExpr(s))
+      .withColumn("__salt",
+        if (saltFactor == 1) lit(0)
+        else pmod(xxhash64(s.keyCols.map(col): _*), lit(saltFactor)))
 
   /** Apply one micro-batch of change events (already LSN-deduped upstream;
     * this still reduces to one winner per key for safety/determinism) to
@@ -569,18 +651,13 @@ class LakeTable(
     //    the step-4 comment.
     import org.apache.spark.sql.expressions.Window
     val saltFactor = math.max(1, math.ceil(
-      spark.sparkContext.defaultParallelism.toDouble / numBuckets).toInt)
-    val saltCol =
-      if (saltFactor == 1) lit(0)
-      else pmod(xxhash64(keyCols.map(col): _*), lit(saltFactor))
-    val writeParts = math.max(1, math.min(numBuckets * saltFactor,
+      spark.sparkContext.defaultParallelism.toDouble / cur.numBuckets).toInt)
+    val writeParts = math.max(1, math.min(cur.numBuckets * saltFactor,
       spark.sparkContext.defaultParallelism * 2))
-    val bucketed = batch
-      .withColumn("__bucket", bucketExpr)
-      .withColumn("__salt", saltCol)
+    val bucketed = withBucketAndSalt(batch, cur, saltFactor)
       .repartition(writeParts, col("__bucket"), col("__salt"))
     val w = Window
-      .partitionBy((col("__bucket") +: col("__salt") +: keyCols.map(col)): _*)
+      .partitionBy((col("__bucket") +: col("__salt") +: cur.keyCols.map(col)): _*)
       .orderBy(col(lsnCol).desc, (col(opCol) === "delete").desc, col(opCol).desc)
     val winners =
       if (preReduced) bucketed
@@ -624,7 +701,7 @@ class LakeTable(
       // they write the delta (a ≤numBuckets-entry map) — no second job,
       // no driver-side parquet footer reads at commit time
       graft.functions.BucketMaxLsn
-        .bucketMaxLsn(col("__bucket"), col(LsnMeta), numBuckets).as("lin")) ++
+        .bucketMaxLsn(col("__bucket"), col(LsnMeta), cur.numBuckets).as("lin")) ++
       (if (hasExtra)
         Seq(array_distinct(flatten(collect_set(map_keys(col(ExtraMeta)))))
           .as("ks"))
@@ -635,8 +712,10 @@ class LakeTable(
 
     // 4. append the delta, one file per touched bucket. Write parallelism
     //    is guarded stat-free: when the executor fleet is wider than the
-    //    bucket count (small tables, test tables), rows are salted by key
-    //    hash so no single task serializes a bucket's write; when buckets
+    //    bucket count (small tables, test tables), rows are salted by a
+    //    second key hash (`withBucketAndSalt`: xxhash64, independent of
+    //    the bucket's Murmur3) so no single task serializes a bucket's
+    //    write; when buckets
     //    ≥ cores (the 100 TB shape: thousands of buckets) the salt factor
     //    is 1 and each bucket stays one file. Post-dedup batches hold one
     //    row per key, so per-bucket volume is hash-uniform — the earlier
@@ -657,11 +736,7 @@ class LakeTable(
     //    directly from the windowed partitions.
     val newVersion = cur.version + 1
     val deltaRel = s"data/v$newVersion/delta"
-    projected
-      .write.mode(SaveMode.Overwrite)
-      .partitionBy("__bucket")
-      .parquet(s"$tablePath/$deltaRel")
-    val deltaFiles = enumerateBucketEntries(deltaRel)
+    val deltaFiles = writeBuckets(projected, deltaRel)
 
     // 5. driver-side commit facts, ALL from the observed metrics of the
     //    one write job: counts, drift keys, and the per-bucket lineage
@@ -733,21 +808,10 @@ class LakeTable(
          removedPaths: Seq[String]) =
       if (tails.isEmpty) (grown, Nil, Nil)
       else {
-        val rewriteRel = s"data/v$newVersion/rewrite"
-        val resolveW = Window.partitionBy(keyCols.map(col): _*)
-          .orderBy(col(LsnMeta).desc, col(DeletedMeta).desc)
-        val afterSnapshot = cur.copy(schemaDdl = newSchema.toDDL)
-        liftDrift(afterSnapshot,
-            readFiles(extendedSchema(afterSnapshot, newSchema),
-              tails.values.flatten.map(_.path).toSeq))
-          .withColumn("__bucket", bucketExpr)
-          .withColumn("__mrn", row_number().over(resolveW))
-          .filter(col("__mrn") === 1).drop("__mrn")
-          .repartition(tails.size, col("__bucket"))
-          .write.mode(SaveMode.Overwrite)
-          .partitionBy("__bucket")
-          .parquet(s"$tablePath/$rewriteRel")
-        val rewritten = enumerateBucketEntries(rewriteRel)
+        val rewritten = writeBuckets(
+          resolveForRewrite(cur.copy(schemaDdl = newSchema.toDDL),
+            tails.values.flatten.toSeq),
+          s"data/v$newVersion/rewrite")
         val removed = tails.values.flatten.map(_.path).toSeq
         val fin = grown.map { case (b, fs) =>
           tails.get(b) match {
@@ -800,23 +864,49 @@ class LakeTable(
     try st.iterator().asScala.toSeq finally st.close()
   }
 
+  /** `$tablePath/$rel/__bucket=B/` directories → bucket -> their parquet
+    * files.
+    */
+  private def bucketDirs(rel: String): Map[String, Seq[Path]] =
+    listChildren(root.resolve(rel))
+      .filter(p => p.getFileName.toString.startsWith("__bucket="))
+      .map(p => p.getFileName.toString.stripPrefix("__bucket=") ->
+        listChildren(p).filter(_.getFileName.toString.endsWith(".parquet")))
+      .toMap
+
   /** List `$tablePath/$rel/__bucket=B/` parquet files → bucket -> manifest
-    * entries (path + size). The one local stat per JUST-WRITTEN file here
-    * is the only time a file's size is ever read from the filesystem —
+    * entries (path + size), for the change feed, whose deltas outlive
+    * their manifest entries.
+    */
+  private def enumerateBucketEntries(rel: String): Map[String, Seq[ManifestFile]] =
+    bucketDirs(rel).map { case (b, fs) =>
+      b -> fs.map(f => ManifestFile(b, s"$rel/__bucket=$b/${f.getFileName}",
+        try Files.size(f) catch { case _: java.io.IOException => 0L }))
+    }
+
+  /** Write `df` (which carries `__bucket`) under `rel`, one directory per
+    * bucket, and register its files: each is renamed to carry Spark's
+    * bucket-file suffix (`BucketingUtils.bucketIdToString`, before the
+    * first `.` of the name, as Spark's own bucketed writer places it) —
+    * the bucketed scan groups files into buckets by that name — together
+    * with its checksum sidecar. The one local stat per just-written file
+    * here is the only time a file's size is read from the filesystem;
     * afterwards it travels in the manifests.
     */
-  private def enumerateBucketEntries(rel: String): Map[String, Seq[ManifestFile]] = {
-    val dir = Paths.get(tablePath).resolve(rel)
-    listChildren(dir)
-      .filter(p => p.getFileName.toString.startsWith("__bucket="))
-      .map { p =>
-        val b = p.getFileName.toString.stripPrefix("__bucket=")
-        val fs = listChildren(p)
-          .filter(_.getFileName.toString.endsWith(".parquet"))
-          .map(f => ManifestFile(b, s"$rel/__bucket=$b/${f.getFileName}",
-            try Files.size(f) catch { case _: java.io.IOException => 0L }))
-        b -> fs
-      }.toMap
+  private def writeBuckets(df: DataFrame, rel: String): Map[String, Seq[ManifestFile]] = {
+    df.write.mode(SaveMode.Overwrite).partitionBy("__bucket")
+      .parquet(s"$tablePath/$rel")
+    bucketDirs(rel).map { case (b, fs) =>
+      b -> fs.map { f =>
+        val n = f.getFileName.toString
+        val named = f.resolveSibling(
+          n.patch(n.indexOf('.'), BucketingUtils.bucketIdToString(b.toInt), 0))
+        Files.move(f, named)
+        val crc = f.resolveSibling(s".$n.crc")
+        if (Files.exists(crc)) Files.move(crc, named.resolveSibling(s".${named.getFileName}.crc"))
+        ManifestFile(b, s"$rel/__bucket=$b/${named.getFileName}", Files.size(named))
+      }
+    }
   }
 
   /** Incremental change feed: the rows applied by each MERGE commit in
@@ -854,7 +944,7 @@ class LakeTable(
     val rel = ((fromVersionExclusive + 1) to toVersionInclusive).flatMap { v =>
       val deltaDir = root.resolve(s"data/v$v/delta")
       if (!Files.isDirectory(deltaDir)) Nil // compaction-only version
-      else enumerateBucketEntries(s"data/v$v/delta").values.flatten.map(_.path)
+      else enumerateBucketEntries(s"data/v$v/delta").values.flatten
     }
     if (rel.isEmpty)
       spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
@@ -864,7 +954,7 @@ class LakeTable(
       // `/data/vN/delta/` path component — a table rooted under a
       // directory that itself matches the pattern (e.g.
       // `/x/data/v2/delta/mytable`) must not mislabel every row's version
-      liftDrift(cur, readFiles(extendedSchema(cur, sch), rel)
+      liftDrift(cur, relation(cur, rel, bucketed = false)
         .withColumn("__version",
           regexp_extract(col("_metadata.file_path"), ".*/data/v(\\d+)/delta/", 1)
             .cast(LongType)))
@@ -993,19 +1083,14 @@ class LakeTable(
     val cur = currentSnapshot.getOrElse(
       throw new IllegalStateException("no table"))
     val newVersion = cur.version + 1
-    val dataRel = s"data/v$newVersion"
-    val base = if (dropTombstones) readMeta().filter(!col(DeletedMeta))
-      else readMeta()
+    val resolved = resolveForRewrite(cur, entriesOf(cur).values.flatten.toSeq)
+    val base = if (dropTombstones) resolved.filter(!col(DeletedMeta)) else resolved
     val sniffable = driftCols(cur).filter(c =>
       StructType.fromDDL(cur.schemaDdl)(c).dataType == StringType)
     val typed =
       if (sniffable.isEmpty) base
       else graft.sources.Sources.sniffTypes(base, Some(sniffable))
-    typed.withColumn("__bucket", bucketExpr)
-      .repartition(numBuckets, col("__bucket"))
-      .write.mode(SaveMode.Overwrite).partitionBy("__bucket")
-      .parquet(s"$tablePath/$dataRel")
-    val newBucketFiles = enumerateBucketEntries(dataRel)
+    val newBucketFiles = writeBuckets(typed, s"data/v$newVersion")
     // snapshot schema follows the sniffed types (order unchanged)
     val newDdl = StructType(StructType.fromDDL(cur.schemaDdl).fields.map { f =>
       typed.schema.find(_.name == f.name)
@@ -1024,7 +1109,7 @@ class LakeTable(
 object LakeTable {
 
   /** On-disk snapshot format this code writes (and the max it reads). */
-  val CurrentFormatVersion = 2
+  val CurrentFormatVersion = 3
 
   /** JSON (de)serialization of snapshots + manifests via json4s (ships
     * with Spark).
@@ -1049,10 +1134,14 @@ object LakeTable {
       }
       if (fv < CurrentFormatVersion)
         throw new IllegalStateException(
-          s"unreadable lake snapshot: written as formatVersion $fv (the " +
-            "pre-manifest format inlined `files` and carried no " +
-            s"formatVersion field); this reader supports formatVersion " +
-            s"${CurrentFormatVersion}")
+          s"unreadable lake snapshot: written as formatVersion $fv (" +
+            (if (fv == 2) "its buckets are xxhash64(keys) mod numBuckets; " +
+              "formatVersion 3 changed the bucket function to Spark's " +
+              "Murmur3 hash partitioning, pmod(hash(keys), numBuckets), " +
+              "so its rows sit in the wrong buckets for this reader"
+            else "the pre-manifest format inlined `files` and carried no " +
+              "formatVersion field") +
+            s"); this reader supports formatVersion $CurrentFormatVersion")
       require(fv <= CurrentFormatVersion,
         s"lake snapshot formatVersion $fv is newer than this " +
           s"reader (supports <= ${CurrentFormatVersion}); upgrade graft")

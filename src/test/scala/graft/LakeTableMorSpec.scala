@@ -2,6 +2,10 @@ package graft
 
 import graft.envelope.ChangeEvent
 import graft.lake.LakeTable
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.types.StructType
 
 /** Merge-on-read mechanics of the LakeTable: delta appends leave old
@@ -18,6 +22,12 @@ class LakeTableMorSpec extends SparkSpec {
   private def ev(lsn: Long, op: String, key: Int): ChangeEvent =
     ChangeEvent(lsn, op, new java.sql.Timestamp(0), s"r${key % 3}",
       s"p$key", f"c$lsn%040d", "scala", s"content-$lsn-k$key", Map.empty)
+
+  /** Shuffle exchanges of a plan, looking inside AQE query stages. */
+  private object Plans extends AdaptiveSparkPlanHelper {
+    def shuffles(plan: SparkPlan): Seq[ShuffleExchangeExec] =
+      collect(plan) { case e: ShuffleExchangeExec => e }
+  }
 
   test("merge appends deltas; prior files persist until the budget rewrites them") {
     import spark.implicits._
@@ -446,6 +456,15 @@ class LakeTableMorSpec extends SparkSpec {
         Map.empty, Map.empty, 0L, Seq("repo"), formatVersion = 99))
     val e2 = intercept[IllegalArgumentException](SnapshotCodec.fromJson(future))
     assert(e2.getMessage.contains("newer than this reader"))
+    // formatVersion 2 bucketed by xxhash64: under the Murmur3 bucket
+    // function its rows sit in the wrong buckets, and the error says so
+    val v2 = SnapshotCodec.toJson(
+      graft.lake.Snapshot(1L, "repo STRING", 2, Seq("repo"), Nil,
+        Map.empty, Map.empty, 0L, Seq("repo"), formatVersion = 2))
+    val e3 = intercept[IllegalStateException](SnapshotCodec.fromJson(v2))
+    assert(e3.getMessage.contains("formatVersion 2") &&
+      e3.getMessage.contains("xxhash64") && e3.getMessage.contains("Murmur3"),
+      e3.getMessage)
     // round-trip of the current format is exact
     val s = graft.lake.Snapshot(7L, "repo STRING, path STRING", 4,
       Seq("repo", "path"), Seq("_manifests/m-7-abc.json"),
@@ -532,5 +551,99 @@ class LakeTableMorSpec extends SparkSpec {
     val got = lake.read().select("repo", "path", "content").collect()
       .map(r => (r.getString(0), r.getString(1), r.getString(2))).toSet
     assert(got === expect)
+  }
+
+  test("merge salt is independent of the bucket: saltFactor 2 over 2 buckets " +
+      "yields 4 (__bucket, __salt) groups") {
+    import spark.implicits._
+    val dir = tmpDir("mor-salt")
+    val lake = LakeTable(spark, dir, Seq("repo", "path"), 2)
+    lake.createIfAbsent(StructType.fromDDL(baseDdl))
+    // local[4] over 2 buckets: the merge's saltFactor is ceil(4 / 2) = 2
+    assert(spark.sparkContext.defaultParallelism === 4)
+    val batch = (1 to 64).map(k => ev(k.toLong, "insert", k)).toDS().toDF()
+    val groups = lake.withBucketAndSalt(batch, lake.currentSnapshot.get, saltFactor = 2)
+      .select("__bucket", "__salt").distinct().count()
+    assert(groups === 4L)
+  }
+
+  test("MOR reads plan no shuffle: read, readVersion and lookup over " +
+      "multi-file buckets resolve per bucket task") {
+    import spark.implicits._
+    import org.apache.spark.sql.execution.datasources.BucketingUtils
+    val dir = tmpDir("mor-noshuffle")
+    val lake = LakeTable(spark, dir, Seq("repo", "path"), 4)
+    lake.createIfAbsent(StructType.fromDDL(baseDdl))
+    lake.merge((1 to 16).map(k => ev(k.toLong, "insert", k)).toDS().toDF(), "t", 0L)
+    lake.merge((1 to 16 by 3).map(k => ev(100L + k, "update", k)).toDS().toDF(), "t", 1L)
+    val s = lake.currentSnapshot.get
+    assert(lake.filesOf(s).values.exists(_.size > 1), "need a multi-file bucket")
+    // every registered file names its bucket the way Spark's bucketed
+    // writer does, which is how the bucketed scan groups them
+    lake.entriesOf(s).foreach { case (b, fs) =>
+      fs.foreach { f =>
+        val name = java.nio.file.Paths.get(f.path).getFileName.toString
+        assert(BucketingUtils.getBucketId(name) === Some(b.toInt), f.path)
+      }
+    }
+    def finalShuffles(df: DataFrame): Seq[ShuffleExchangeExec] = {
+      df.collect()
+      Plans.shuffles(df.queryExecution.executedPlan)
+    }
+    val read = lake.read()
+    assert(read.queryExecution.executedPlan.toString.contains("Window"),
+      "the read must resolve its multi-file buckets")
+    assert(finalShuffles(read).isEmpty, read.queryExecution.executedPlan.toString)
+    Seq(1L, 2L).foreach { v =>
+      val tt = lake.readVersion(v)
+      assert(finalShuffles(tt).isEmpty, tt.queryExecution.executedPlan.toString)
+    }
+    // key 1 was updated, so its bucket holds two files
+    val hit = lake.lookup(Seq("r1", "p1"))
+    assert(finalShuffles(hit).isEmpty, hit.queryExecution.executedPlan.toString)
+    assert(hit.select("content").as[String].collect().toSeq === Seq("content-101-k1"))
+  }
+
+  test("read() is truly bucketed: joined on the keys with a frame hash-" +
+      "partitioned into numBuckets it equals the join with bucketing disabled") {
+    import spark.implicits._
+    import org.apache.spark.sql.functions.col
+    val n = 4
+    val dir = tmpDir("mor-bucketjoin")
+    val writer = LakeTable(spark, dir, Seq("repo", "path"), n)
+    writer.createIfAbsent(StructType.fromDDL(baseDdl))
+    writer.merge((1 to 40).map(k => ev(k.toLong, "insert", k)).toDS().toDF(), "t", 0L)
+    writer.merge(Seq(ev(101L, "update", 1)).toDS().toDF(), "t", 1L)
+    val files = writer.filesOf(writer.currentSnapshot.get)
+    assert(files.values.exists(_.size > 1) && files.values.exists(_.size == 1),
+      s"test precondition: mixed single- and multi-file buckets, got $files")
+    // broadcast off, so the join is a sort-merge join free to reuse both
+    // sides' partitioning; each variant on its own session
+    def joined(bucketing: Boolean): (Set[(String, String, String, Long)], Int) = {
+      val session = spark.newSession()
+      session.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+      session.conf.set("spark.sql.sources.bucketing.enabled", bucketing.toString)
+      val probe = session.createDataFrame((0 to 50).map(k => (s"r${k % 3}", s"p$k", k.toLong)))
+        .toDF("repo", "path", "probe")
+        .repartition(n, col("repo"), col("path"))
+      val df = LakeTable(session, dir, Seq("repo", "path"), n).read()
+        .join(probe, Seq("repo", "path"))
+        .select("repo", "path", "content", "probe")
+      val rows = df.collect()
+        .map(r => (r.getString(0), r.getString(1), r.getString(2), r.getLong(3))).toSet
+      (rows, Plans.shuffles(df.queryExecution.executedPlan).size)
+    }
+    def check(state: String): Unit = {
+      val (bucketed, bucketedShuffles) = joined(bucketing = true)
+      val (plain, _) = joined(bucketing = false)
+      // only the probe's own repartition shuffles: the lake side's claimed
+      // HashPartitioning is taken as is, so a wrong bucket id would drop rows
+      assert(bucketedShuffles === 1, s"$state: lake side was shuffled")
+      assert(bucketed === plain, state)
+      assert(plain.size === 40, state)
+    }
+    check("mixed single- and multi-file buckets")
+    writer.compact()
+    check("compacted")
   }
 }

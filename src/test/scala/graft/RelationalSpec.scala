@@ -176,15 +176,16 @@ class RelationalSpec extends SparkSpec {
     // NTZ is accepted and must produce exactly the TIMESTAMP result.
     val lNtz = l.withColumn("t", col("t").cast("timestamp_ntz"))
     val rNtz = r.withColumn("t", col("t").cast("timestamp_ntz"))
-    val tzKey = "spark.sql.session.timeZone"
-    val savedTz = spark.conf.get(tzKey)
-    try {
-      spark.conf.set(tzKey, "America/Los_Angeles")
-      val e1 = intercept[IllegalArgumentException] {
-        Relational.rangeJoin(lNtz, r, "k", "k", "t", "t", -3600L, 0L, Seq("rid"))
-      }
-      assert(e1.getMessage.contains("must be TIMESTAMP"))
-    } finally spark.conf.set(tzKey, savedTz)
+    // the DST-rules zone lives on an isolated session (own SQLConf, shared
+    // context), so suites running beside this one keep seeing UTC
+    val la = spark.newSession()
+    la.conf.set("spark.sql.session.timeZone", "America/Los_Angeles")
+    def onLa(df: org.apache.spark.sql.DataFrame) =
+      la.createDataFrame(df.collectAsList(), df.schema)
+    val e1 = intercept[IllegalArgumentException] {
+      Relational.rangeJoin(onLa(lNtz), onLa(r), "k", "k", "t", "t", -3600L, 0L, Seq("rid"))
+    }
+    assert(e1.getMessage.contains("must be TIMESTAMP"))
     val wantPairs = Relational
       .rangeJoin(l, r, "k", "k", "t", "t", -3600L, 0L, Seq("rid"))
       .select("lid", "r_rid").collect().map(x => (x.getLong(0), x.getLong(1))).toSet
