@@ -19,10 +19,14 @@ import org.apache.spark.sql.functions._
   */
 object Main {
 
-  private def session(name: String): SparkSession = {
+  /** The one SparkSession every entry point builds (CLI commands,
+    * `Verify`, `Plans`, and the benchmark, which looks it up reflectively
+    * as `session(String)`). `SPARK_GRAFT_CPUS` sets the worker threads.
+    */
+  private[graft] def session(name: String): SparkSession = {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
       math.min(Runtime.getRuntime.availableProcessors(), 32).toString)
-    val b = SparkSession.builder()
+    val s = SparkSession.builder()
       .master(s"local[$cpus]")
       .appName(name)
       .config("spark.sql.shuffle.partitions", cpus)
@@ -33,22 +37,16 @@ object Main {
       // is ChecksumFileSystem, which writes a .crc sidecar per file —
       // per-batch checkpoint/changelog/delta commits create 2x the files
       // for integrity the engine already gets from the lake's atomic
-      // snapshot commit (and, on a cluster, from the DFS block layer).
-      // SPARK_GRAFT_RAWFS=off restores checksummed local files.
-      .config("spark.hadoop.fs.file.impl",
-        if (sys.env.get("SPARK_GRAFT_RAWFS").contains("off"))
-          "org.apache.hadoop.fs.LocalFileSystem"
-        else "org.apache.hadoop.fs.RawLocalFileSystem")
-    // RocksDB keyed state by default (BENCH.md "State store"): bounded
-    // memory at any key cardinality; SPARK_GRAFT_STATE_STORE=hdfs opts out
-    if (!sys.env.get("SPARK_GRAFT_STATE_STORE").contains("hdfs"))
-      b.config("spark.sql.streaming.stateStore.providerClass",
+      // snapshot commit (and, on a cluster, from the DFS block layer)
+      .config("spark.hadoop.fs.file.impl", "org.apache.hadoop.fs.RawLocalFileSystem")
+      // RocksDB keyed state: bounded memory at any key cardinality
+      .config("spark.sql.streaming.stateStore.providerClass",
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-        // changelog checkpointing: per-batch commit uploads the changelog,
-        // full snapshots happen in the background (BENCH.md "State store")
-        .config("spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled",
-          "true")
-    val s = b.getOrCreate()
+      // changelog checkpointing: the per-batch commit uploads the
+      // changelog; full snapshots happen in the background
+      .config("spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled",
+        "true")
+      .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
   }
@@ -415,7 +413,7 @@ object Main {
         // 82-90 (the reference serves promhttp + healthchecks regardless
         // of source type). http-source pipelines already expose them on
         // the ingest port; changelog pipelines get a dedicated server.
-        val listener = new graft.job.MetricsListener(verbose = false)
+        val listener = new graft.job.MetricsListener
         spark.streams.addListener(listener)
         @volatile var queryLive = false
         val ops =
@@ -435,9 +433,17 @@ object Main {
         val t0 = System.nanoTime()
         queryLive = true
         val stats =
-          try followMs match {
-            case Some(ms) => job.runFollowing(ms, idleMs)
-            case None => job.runToCompletion()
+          try {
+            val st = followMs match {
+              case Some(ms) => job.runFollowing(ms, idleMs)
+              case None => job.runToCompletion()
+            }
+            // the listener bus is asynchronous: the query's last progress
+            // events may still be queued when the query returns, and
+            // removing the listener would drop them
+            require(listener.awaitTerminated(60000L),
+              "the streaming query's termination event never reached the listener")
+            st
           } finally {
             queryLive = false
             ops.foreach(_.stop())
@@ -445,10 +451,12 @@ object Main {
           }
         val secs = (System.nanoTime() - t0) / 1e9
         val applied = stats.filterNot(_.skippedAsApplied)
-        val events = applied.map(_.inputRows).sum
+        // consumed: source rows before dedup; applied: rows merged after it
+        val consumed = listener.totalRows.get
         println(f"[graft] replay done: ${applied.size} micro-batches, " +
-          f"$events events applied in $secs%.1f s " +
-          f"(${events / math.max(secs, 1e-9)}%.0f events/s)")
+          f"$consumed events consumed in $secs%.1f s " +
+          f"(${consumed / math.max(secs, 1e-9)}%.0f events/s), " +
+          f"${applied.map(_.inputRows).sum} rows applied")
         if (jdbcSink.isEmpty) {
           val table = job.lake.read()
           println(s"[graft] lake version=${job.lake.currentVersion.getOrElse(-1L)} " +

@@ -434,21 +434,6 @@ object SparkEntry {
       "doc_id", "text", n = 4)
   }
 
-  /** Scratch root for the transient lake fixtures below: tmpfs when
-    * available (same storage class Bench pins `spark.local.dir` to).
-    * These queries measure the merge/read computation; on this sandbox
-    * the default java.io.tmpdir disk throttles from ~258 MB/s to
-    * ~12 MB/s once burst credits exhaust (BENCH.md), which times the
-    * hypervisor, not the engine — the production analog is a lake on
-    * NVMe/object storage, not a depleted burst volume (guide §6).
-    */
-  private def fixtureTmpDir(prefix: String): String = {
-    val shm = new java.io.File("/dev/shm")
-    if (shm.isDirectory && shm.canWrite)
-      java.nio.file.Files.createTempDirectory(shm.toPath, prefix).toString
-    else java.nio.file.Files.createTempDirectory(prefix).toString
-  }
-
   /** The lake MERGE + bucket-pruned point lookup as an oracle-checked
     * row: ingest the events changelog into a fresh LakeTable (key =
     * user_id, purchase ⇒ delete) in one merge commit, then `lookup` the
@@ -459,7 +444,7 @@ object SparkEntry {
     */
   private def lakeLookup(spark: SparkSession, dir: String): DataFrame = {
     val ev = t(spark, dir, "events")
-    val tmp = fixtureTmpDir("graft-lake-lookup")
+    val tmp = java.nio.file.Files.createTempDirectory("graft-lake-lookup").toString
     try {
       val lake = graft.lake.LakeTable(spark, tmp, Seq("user_id"), numBuckets = 8)
       lake.createIfAbsent(org.apache.spark.sql.types.StructType.fromDDL(
@@ -486,7 +471,7 @@ object SparkEntry {
     */
   private def lakeChangeFeed(spark: SparkSession, dir: String): DataFrame = {
     val ev = t(spark, dir, "events")
-    val tmp = fixtureTmpDir("graft-lake-feed")
+    val tmp = java.nio.file.Files.createTempDirectory("graft-lake-feed").toString
     try {
       val lake = graft.lake.LakeTable(spark, tmp, Seq("user_id"), numBuckets = 8)
       lake.createIfAbsent(org.apache.spark.sql.types.StructType.fromDDL(
@@ -516,7 +501,7 @@ object SparkEntry {
     */
   private def lakeTimeTravel(spark: SparkSession, dir: String): DataFrame = {
     val ev = t(spark, dir, "events")
-    val tmp = fixtureTmpDir("graft-lake-tt")
+    val tmp = java.nio.file.Files.createTempDirectory("graft-lake-tt").toString
     try {
       val lake = graft.lake.LakeTable(spark, tmp, Seq("user_id"), numBuckets = 8)
       lake.createIfAbsent(org.apache.spark.sql.types.StructType.fromDDL(
@@ -546,7 +531,7 @@ object SparkEntry {
     */
   private def lakeCompactedState(spark: SparkSession, dir: String): DataFrame = {
     val ev = t(spark, dir, "events")
-    val tmp = fixtureTmpDir("graft-lake-compact")
+    val tmp = java.nio.file.Files.createTempDirectory("graft-lake-compact").toString
     try {
       val lake = graft.lake.LakeTable(spark, tmp, Seq("user_id"), numBuckets = 8)
       lake.createIfAbsent(org.apache.spark.sql.types.StructType.fromDDL(

@@ -39,15 +39,6 @@ final case class CdcJobConfig(
     // copy): json | xml (native expressions) | yaml (transcoded to JSON
     // per partition, then the JSON path)
     codec: String = "json",
-    // what the dedup key-shuffle carries (parquet changelogs only):
-    //  - "skinny" (default): ordering fields + a (file, row-index) handle;
-    //    winner payloads are re-materialized after dedup by a broadcast
-    //    semi-join against the page-cached batch files. ~10× less shuffle
-    //    under CDC duplication (many updates per key per batch).
-    //  - "full": rows carry their payload through the shuffle — the right
-    //    shape when keys/batch ≈ rows/batch (no duplication to exploit)
-    //    or when re-reading the source is expensive (remote cold store).
-    carry: String = "skinny",
     // per-key dedup-state TTL (ProcessingTimeTimeout): bounds state when
     // most of a 10^10-key space goes cold; expiry re-admits stale
     // duplicates as idempotent rows the lake's monotone merge absorbs
@@ -120,7 +111,7 @@ class CdcJob(spark: SparkSession, cfg: CdcJobConfig) {
       "dedupStateTtlMs requires a ProcessingTime trigger (runFollowing); " +
         "AvailableNow never terminates under ProcessingTimeTimeout")
     if (cfg.jdbcSink.isEmpty) lake.createIfAbsent(baseSchema)
-    if (cfg.carry == "skinny" && cfg.format == "parquet") startSkinny(trigger)
+    if (cfg.format == "parquet") startSkinny(trigger)
     else startFull(trigger)
   }
 
@@ -184,7 +175,7 @@ class CdcJob(spark: SparkSession, cfg: CdcJobConfig) {
         .withColumn("extra", coalesce(col("extra"), map()))
   }
 
-  /** Ledger-gated sink dispatch shared by both carry pipelines: skip the
+  /** Ledger-gated sink dispatch shared by both pipelines: skip the
     * SINK for crash-replayed batches (exactly-once for the DLQ and
     * stats, not just the table), otherwise materialize the batch and
     * apply it.
@@ -238,18 +229,13 @@ class CdcJob(spark: SparkSession, cfg: CdcJobConfig) {
     }
   }
 
-  /** Full-payload pipeline: rows carry their payload through the dedup
-    * shuffle. Used for text changelogs (no parquet row index to refetch
-    * by) and `carry = "full"`.
+  /** Full-payload pipeline for text changelogs: rows carry their payload
+    * through the dedup shuffle, since a text line has no parquet row
+    * index to refetch it by.
     */
   private def startFull(trigger: Trigger): StreamingQuery = {
     import spark.implicits._
     val events: org.apache.spark.sql.Dataset[ChangeEvent] = cfg.format match {
-      case "parquet" =>
-        bounded(spark.readStream.schema(ChangeEvent.schema))
-          .parquet(s"${cfg.logDir}/seg=*")
-          .withColumn("extra", coalesce(col("extra"), map()))
-          .as[ChangeEvent]
       case "jsonl" =>
         // raw text + codec ≙ the draethos kafka-source + codec path
         // (`internal/source/kafka.go:130`, `internal/codec/{json,xml,
@@ -288,20 +274,18 @@ class CdcJob(spark: SparkSession, cfg: CdcJobConfig) {
       .trigger(trigger)
       .foreachBatch { (batch: org.apache.spark.sql.Dataset[ChangeEvent], batchId: Long) =>
         sinkBatch(batchId, () => batch.foreach(_ => ())) { () =>
-          if (cfg.format == "jsonl") {
-            // materialize once so the DLQ split doesn't re-execute the
-            // stateful upstream; parquet-format batches skip these jobs.
-            // Crash-replayed batches never reach here (sinkBatch gates on
-            // the ledger), so the DLQ stays exactly-once like the table.
-            val df = graft.util.Materialize.barrier(batch.toDF())
-            cfg.dlqDir.foreach { dir =>
-              df.filter(col("op") === DlqOp)
-                .select(col("content").as("raw"),
-                  current_timestamp().as("dlq_ts"))
-                .write.mode("append").parquet(dir)
-            }
-            df.filter(col("op") =!= DlqOp)
-          } else batch.toDF()
+          // materialize once so the DLQ split doesn't re-execute the
+          // stateful upstream. Crash-replayed batches never reach here
+          // (sinkBatch gates on the ledger), so the DLQ stays exactly-once
+          // like the table.
+          val df = graft.util.Materialize.barrier(batch.toDF())
+          cfg.dlqDir.foreach { dir =>
+            df.filter(col("op") === DlqOp)
+              .select(col("content").as("raw"),
+                current_timestamp().as("dlq_ts"))
+              .write.mode("append").parquet(dir)
+          }
+          df.filter(col("op") =!= DlqOp)
         }
       }
       .start()

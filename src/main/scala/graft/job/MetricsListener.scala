@@ -1,24 +1,19 @@
 package graft.job
 
 import org.apache.spark.sql.streaming.StreamingQueryListener
-import java.util.concurrent.ConcurrentLinkedQueue
-import scala.jdk.CollectionConverters._
+import java.util.concurrent.{CountDownLatch, TimeUnit}
+import java.util.concurrent.atomic.AtomicLong
 
-/** Per-micro-batch throughput metrics — the analog of the reference's
-  * Prometheus endpoint (`internal/worker.go:93-108`), emitted as JSON
-  * lines per micro-batch and retained for BENCH artifacts.
+/** Cumulative streaming counters — the analog of the reference's
+  * Prometheus endpoint (`internal/worker.go:93-108`).
   */
-class MetricsListener(verbose: Boolean = false) extends StreamingQueryListener {
-  final case class BatchMetric(
-      batchId: Long, inputRows: Long, durationMs: Long, rowsPerSec: Double)
+class MetricsListener extends StreamingQueryListener {
+  val totalBatches = new AtomicLong(0L)
+  // rows the source consumed, before dedup (the replay's events)
+  val totalRows = new AtomicLong(0L)
+  val lastBatchId = new AtomicLong(-1L)
 
-  val metrics = new ConcurrentLinkedQueue[BatchMetric]()
-
-  // cumulative counters for the ops endpoint (drain() empties the queue,
-  // so scrapes can't ride on it)
-  val totalBatches = new java.util.concurrent.atomic.AtomicLong(0L)
-  val totalRows = new java.util.concurrent.atomic.AtomicLong(0L)
-  val lastBatchId = new java.util.concurrent.atomic.AtomicLong(-1L)
+  private val terminated = new CountDownLatch(1)
 
   /** Prometheus text rendering ≙ the reference's promhttp route
     * (`internal/worker.go:106-108`).
@@ -32,31 +27,25 @@ class MetricsListener(verbose: Boolean = false) extends StreamingQueryListener {
        |graft_last_batch_id ${lastBatchId.get}
        |""".stripMargin
 
+  /** Block until a query's termination event has been delivered. The
+    * listener bus is asynchronous, but it delivers a query's events in
+    * order, so after this returns true every progress event of that
+    * query is already counted.
+    */
+  def awaitTerminated(timeoutMs: Long): Boolean =
+    terminated.await(timeoutMs, TimeUnit.MILLISECONDS)
+
   override def onQueryStarted(e: StreamingQueryListener.QueryStartedEvent): Unit = ()
-  override def onQueryTerminated(e: StreamingQueryListener.QueryTerminatedEvent): Unit = ()
+  override def onQueryTerminated(e: StreamingQueryListener.QueryTerminatedEvent): Unit =
+    terminated.countDown()
   override def onQueryProgress(e: StreamingQueryListener.QueryProgressEvent): Unit = {
     val p = e.progress
     val dur = Option(p.durationMs.get("triggerExecution"))
       .map(_.longValue).getOrElse(0L)
     if (p.numInputRows > 0 || dur > 0) {
-      val m = BatchMetric(p.batchId, p.numInputRows, dur,
-        if (dur > 0) p.numInputRows * 1000.0 / dur else 0.0)
       totalBatches.incrementAndGet()
       totalRows.addAndGet(p.numInputRows)
       lastBatchId.set(p.batchId)
-      metrics.add(m)
-      if (verbose)
-        System.err.println(
-          s"""{"metric":"micro_batch","batchId":${m.batchId},""" +
-          s""""inputRows":${m.inputRows},"durationMs":${m.durationMs},""" +
-          s""""rowsPerSec":${"%.1f".format(m.rowsPerSec)}}""")
     }
-  }
-
-  def drain(): Seq[BatchMetric] = {
-    val out = scala.collection.mutable.ArrayBuffer.empty[BatchMetric]
-    var m = metrics.poll()
-    while (m != null) { out += m; m = metrics.poll() }
-    out.toSeq
   }
 }

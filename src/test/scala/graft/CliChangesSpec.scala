@@ -43,6 +43,10 @@ class CliChangesSpec extends SparkSpec {
     while (it.hasNext) streamed ::= it.next()
     assert(streamed.size.toLong === expected)
 
+    // the benchmark builds the CLI's session through this exact lookup
+    assert(graft.Main.getClass.getDeclaredMethod("session", classOf[String])
+      .getReturnType === classOf[org.apache.spark.sql.SparkSession])
+
     // e2e: fork the CLI and read its stdout
     val javaBin = s"${System.getProperty("java.home")}/bin/java"
     val cmd = new java.util.ArrayList[String]()

@@ -123,6 +123,13 @@ class CliFollowSpec extends SparkSpec {
     assert(p.exitValue() === 0, s"child failed:\n$out")
     assert(out.contains("oracle check: CONVERGED"), s"not converged:\n$out")
 
+    // the headline counts every line the source consumed (well-formed
+    // and malformed, before dedup), not the post-dedup rows applied
+    val consumedRe = """replay done: \d+ micro-batches, (\d+) events consumed""".r
+    val consumed = consumedRe.findFirstMatchIn(out).map(_.group(1).toLong)
+    assert(consumed === Some(spark.read.text(logDir).count()),
+      s"consumed count is not the log's row count:\n$out")
+
     // late (post-start) events are in the lake: key1 deleted, key3 present
     val lake = graft.lake.LakeTable(spark, s"$root/lake")
     val rows = lake.read().select("path", "content").collect()
